@@ -200,14 +200,16 @@ class ClinicalPipeline:
                             pre_scrub: DataFrame) -> None:
         """A3: the distinct set of rules that fired for this batch
         (etl/scrub_phi.py:81-132), measured as aggregate regexp hit counts
-        over the pre-scrub text — one pass, no per-row side effects."""
+        over the pre-scrub text — one pass, no per-row side effects. All
+        fired rules land in one provenance append."""
         from pyspark.sql import functions as F
 
         from .functions.scrub import rule_hits_expr
 
+        fired: list[tuple[str, str, int]] = []
         if source.source_type == "hl7":
             text = F.col("message")
-            self._record_hl7_column_redactions(source, batch_id, pre_scrub)
+            fired += self._hl7_column_redactions(source, pre_scrub)
         else:
             string_cols = [c for c, t in pre_scrub.dtypes
                            if t == "string" and not c.startswith("_")]
@@ -224,17 +226,17 @@ class ClinicalPipeline:
         by_id = {r.rule_id: r for r in DEFAULT_PHI_RULES}
         for row in totals:
             rule = by_id.get(row["rule_id"])
-            self.prov.record_rule(
-                batch_id, row["rule_id"],
-                rule.description if rule else "", int(row["hits"]),
-            )
+            fired.append((row["rule_id"], rule.description if rule else "",
+                          int(row["hits"])))
+        self.prov.record_rules(batch_id, fired)
 
-    def _record_hl7_column_redactions(self, source: SourceMeta,
-                                      batch_id: str,
-                                      pre_scrub: DataFrame) -> None:
+    def _hl7_column_redactions(
+        self, source: SourceMeta, pre_scrub: DataFrame
+    ) -> list[tuple[str, str, int]]:
         """The reference's PHI_COLUMN_REDACT_{NAME,DATE,GENERIC} entries in
         rules_applied (etl/scrub_phi.py:237-255): count non-empty catalogued
-        is_phi PID fields in one aggregate pass."""
+        is_phi PID fields in one aggregate pass. Returns the fired
+        ``(rule_id, description, hits)`` rows."""
         from pyspark.sql import functions as F
 
         from .functions import hl7 as hl7f
@@ -258,7 +260,7 @@ class ClinicalPipeline:
                 rid = "PHI_COLUMN_REDACT_GENERIC"
             buckets.setdefault(rid, []).append(pos)
         if not buckets:
-            return
+            return []
         aggs = [
             F.sum(
                 sum(
@@ -286,10 +288,8 @@ class ClinicalPipeline:
             "PHI_COLUMN_REDACT_DATE": "column-level date redaction",
             "PHI_COLUMN_REDACT_GENERIC": "column-level generic redaction",
         }
-        for rid in buckets:
-            hits = int(row[rid] or 0)
-            if hits > 0:
-                self.prov.record_rule(batch_id, rid, desc[rid], hits)
+        return [(rid, desc[rid], int(row[rid]))
+                for rid in buckets if (row[rid] or 0) > 0]
 
     # -- stage 4: transform / canonicalize (etl/transform.py:159-215) --------
 
@@ -340,11 +340,13 @@ class ClinicalPipeline:
         union; per-file row counts come from one grouped aggregation; all
         provenance rows land in a handful of appends.
 
-        Contrast run_batch/run_all (per-file sequential, ~20 Spark jobs
-        per file — faithful to the reference's batch-per-file semantics
-        but orchestration-bound: measured ~6 s/file at 5k rows/file).
-        Bulk amortizes the fixed costs across the whole directory; this is
-        the mode a 1000-executor deployment runs.
+        Contrast run_batch/run_all (per-file sequential — faithful to the
+        reference's batch-per-file semantics but orchestration-bound:
+        18-20 Spark jobs and 2.8-4.4 s per valid file of 250-2,000
+        records, measured on a 4-core box with
+        ``perfbench/run.py --workload pipeline --trace 1``). Bulk
+        amortizes the fixed costs across the whole directory; this is the
+        mode a 1000-executor deployment runs.
         """
         source = self.catalog.source(source_name)
         from pyspark.sql import functions as F

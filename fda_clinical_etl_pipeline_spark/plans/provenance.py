@@ -18,10 +18,22 @@ append-only parquet tables (Delta/JDBC in production deployments):
 Idempotency: the reference's ``ON CONFLICT (batch_id) DO NOTHING``
 (etl/provenance_recorder.py:11-16) maps to first-event-wins in the event
 log (min(updated_at) row for status INGESTED).
+
+Writes are the reference's per-event INSERT: each append is one parquet
+file, ``<table>/p_month=YYYY-MM/part-<uuid>.c000.snappy.parquet``,
+written from the driver with pyarrow — no Spark job. The file is first
+written under a dot-prefixed name in the same directory, which every
+parquet reader skips, then renamed into place with ``os.replace``, so a
+reader sees a whole event or none of it. The Arrow schema is derived
+from the ``*_SCHEMA`` DDL strings below (timestamps as UTC-adjusted
+microseconds, which Spark reads as ``timestamp``), so files written
+here and files written by a Spark job union without casts. Readers scan
+with the same DDL schema, which skips Spark's schema-inference job.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
@@ -87,15 +99,42 @@ class ProvenanceStore:
         "audit_log": "created_at",
     }
 
+    _SCHEMA = {
+        "provenance_batch": BATCH_SCHEMA,
+        "provenance_steps": STEP_SCHEMA,
+        "provenance_rules_applied": RULE_SCHEMA,
+        "audit_log": AUDIT_SCHEMA,
+    }
+
     def _append(self, rows: list[tuple], table: str, schema: str) -> None:
-        # NOTE: no coalesce(1) here — a Repartition over the local relation
-        # defeats the direct LocalTableScan write path and costs ~4 s per
-        # append (measured; plain append of the same row: 0.4 s). Empty
-        # partitions write nothing, and compact() folds the small files.
-        df = self.spark.createDataFrame(rows, schema)
-        tcol = self._TIME_COL.get(table)
-        df = df.withColumn("p_month", F.date_format(tcol, "yyyy-MM"))
-        df.write.mode("append").partitionBy("p_month").parquet(
+        """One parquet file per event month in ``rows`` (every caller
+        passes events of one month), written on the driver and renamed
+        into place."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        arrow_schema = _arrow_schema_of(schema)
+        tpos = arrow_schema.get_field_index(self._TIME_COL[table])
+        by_month: dict[str, list[tuple]] = {}
+        for r in rows:
+            by_month.setdefault(r[tpos].strftime("%Y-%m"), []).append(r)
+        for month, part in by_month.items():
+            cols = list(zip(*part))
+            data = pa.Table.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+                schema=arrow_schema,
+            )
+            out_dir = os.path.join(self.root, table, f"p_month={month}")
+            os.makedirs(out_dir, exist_ok=True)
+            name = f"part-{uuid.uuid4()}.c000.snappy.parquet"
+            tmp = os.path.join(out_dir, f".{name}.tmp")
+            pq.write_table(data, tmp, compression="snappy")
+            os.replace(tmp, os.path.join(out_dir, name))
+
+    def _read(self, table: str) -> DataFrame:
+        """The table's event log. The declared schema spares the
+        schema-inference job a bare ``read.parquet`` runs."""
+        return self.spark.read.schema(self._SCHEMA[table]).parquet(
             os.path.join(self.root, table)
         )
 
@@ -168,13 +207,7 @@ class ProvenanceStore:
         VALIDATED, FAILED_* resurrection) are never silent."""
         if self.strict_transitions:
             try:
-                cur = (
-                    self.batches()
-                    .filter(F.col("batch_id") == batch_id)
-                    .select("status")
-                    .collect()
-                )
-                old = cur[0]["status"] if cur else None
+                old = self._current_status(batch_id)
             except Exception:
                 old = None  # no batch table yet — first event
             if old is not None and not check_transition(old, status):
@@ -203,6 +236,21 @@ class ProvenanceStore:
             BATCH_SCHEMA,
         )
 
+    def _current_status(self, batch_id: str) -> str | None:
+        """The batch's latest status by (updated_at, seq) — the same pick
+        as ``batches()``, from one filtered scan of this batch's own
+        events (no window, no shuffle). Read from the files every time,
+        so another writer's events are seen."""
+        rows = (
+            self._read("provenance_batch")
+            .filter(F.col("batch_id") == batch_id)
+            .select("status", "updated_at", "seq")
+            .collect()
+        )
+        if not rows:
+            return None
+        return max(rows, key=lambda r: (r["updated_at"], r["seq"]))["status"]
+
     def record_step(self, batch_id: str, step_name: str, details: dict | None = None):
         """etl/provenance_recorder.py:49-56; details dict → JSON string."""
         self._append(
@@ -215,8 +263,17 @@ class ProvenanceStore:
                     hits: int = 0) -> None:
         """etl/provenance_recorder.py rules_applied insert — which PHI
         rules fired for this batch (A3's distinct-set, persisted)."""
+        self.record_rules(batch_id, [(rule_id, description, hits)])
+
+    def record_rules(self, batch_id: str,
+                     rules: list[tuple[str, str, int]]) -> None:
+        """Every ``(rule_id, description, hits)`` that fired for the
+        batch, in one append."""
+        if not rules:
+            return
+        now = _now()
         self._append(
-            [(batch_id, rule_id, description, hits, _now())],
+            [(batch_id, rid, desc, hits, now) for rid, desc, hits in rules],
             "provenance_rules_applied",
             RULE_SCHEMA,
         )
@@ -224,9 +281,7 @@ class ProvenanceStore:
     def rules_applied(self, batch_id: str) -> DataFrame:
         """GET /provenance/rules/{batch_id} (api/app.py:106-118)."""
         return (
-            self.spark.read.parquet(
-                os.path.join(self.root, "provenance_rules_applied")
-            )
+            self._read("provenance_rules_applied")
             .filter(F.col("batch_id") == batch_id)
             .orderBy("rule_id")
             .drop("p_month")
@@ -248,7 +303,7 @@ class ProvenanceStore:
     def batches(self) -> DataFrame:
         """Current view: latest event per batch_id, with first-seen fields
         carried forward (event-sourced UPDATE)."""
-        log = self.spark.read.parquet(os.path.join(self.root, "provenance_batch"))
+        log = self._read("provenance_batch")
         w = Window.partitionBy("batch_id").orderBy(
             F.col("updated_at").desc(), F.col("seq").desc()
         )
@@ -272,7 +327,7 @@ class ProvenanceStore:
     def steps(self, batch_id: str) -> DataFrame:
         """GET /provenance/steps/{batch_id} (api/app.py:93-102): timeline."""
         return (
-            self.spark.read.parquet(os.path.join(self.root, "provenance_steps"))
+            self._read("provenance_steps")
             .filter(F.col("batch_id") == batch_id)
             .orderBy("step_time")
             .drop("p_month")
@@ -302,7 +357,7 @@ class ProvenanceStore:
         """README.md:225 monitoring query: latest n audit entries
         (ORDER BY created_at DESC LIMIT n — TakeOrderedAndProject, O2)."""
         return (
-            self.spark.read.parquet(os.path.join(self.root, "audit_log"))
+            self._read("audit_log")
             .orderBy(F.col("created_at").desc())
             .limit(n)
             .drop("p_month")
@@ -357,9 +412,7 @@ class ProvenanceStore:
                 "CAST(NULL AS TIMESTAMP), CAST(NULL AS STRING)) "
                 "AS t(batch_id, status, updated_at, prev_status) WHERE 1=0"
             )
-        log = self.spark.read.parquet(
-            os.path.join(self.root, "provenance_batch")
-        )
+        log = self._read("provenance_batch")
         w = Window.partitionBy("batch_id").orderBy(
             F.col("updated_at").asc(), F.col("seq").asc()
         )
@@ -383,6 +436,17 @@ class ProvenanceStore:
                 )
             )
         )
+
+
+@functools.lru_cache(maxsize=None)
+def _arrow_schema_of(ddl: str):
+    """Arrow schema of a DDL string; ``timestamp`` becomes
+    ``timestamp[us, tz=UTC]``, which Spark reads back as ``timestamp``
+    (a naive Arrow timestamp would read back as ``timestamp_ntz``)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    return to_arrow_schema(_parse_datatype_string(ddl), timestamp_utc=True)
 
 
 def _now():

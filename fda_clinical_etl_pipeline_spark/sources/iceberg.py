@@ -1363,18 +1363,22 @@ class IcebergTable:
         eqs = self._equality_deletes_of_snapshot(snap)
         if not eqs:
             return tagged if anti else tagged.limit(0)
-        seq_map = [
+        seq_map = sorted({
             (os.path.basename(e["data_file"]["file_path"]),
              e.get("sequence_number") or 0)
             for e in self._entries_of_snapshot(snap, content=0)
-        ]
-        if 0 < len(seq_map) <= _INLINE_DELETE_ROWS:
+        })
+        unique_names = len({f for f, _ in seq_map}) == len(seq_map)
+        if unique_names and 0 < len(seq_map) <= _INLINE_DELETE_ROWS:
             # the (data file -> sequence) relation is driver-known and
             # small: attach __dataseq as a literal map lookup instead
             # of a broadcast join (one broadcast-build job less; a
-            # missing file yields NULL exactly like the left join did)
+            # missing file yields NULL exactly like the left join did).
+            # A map literal refuses repeated keys: identical (basename,
+            # sequence) pairs collapse above, and a basename left with
+            # two sequence numbers takes the join.
             entries = []
-            for fname, seq in sorted(seq_map):
+            for fname, seq in seq_map:
                 entries.append(F.lit(fname))
                 entries.append(F.lit(int(seq)))
             tagged = tagged.withColumn(

@@ -8,9 +8,8 @@ directory prefixes exactly like the reference's lake tiers
 
 Scale notes: writes inherit the upstream partitioning — a scrub/transform
 plan is narrow, so writing N input splits produces N files with no
-shuffle. No ``coalesce(1)`` anywhere — even on tiny metadata appends a
-Repartition over a local relation costs ~4 s of lost direct-write path
-(measured); small files are handled by compaction instead.
+shuffle. No ``coalesce(1)`` anywhere; small files are handled by
+compaction instead.
 """
 
 from __future__ import annotations

@@ -20,14 +20,20 @@ def _is_full_suite_invocation(config) -> bool:
     """True iff this pytest run targets the WHOLE tests directory with
     no selection narrowing — the only shape the sharded takeover below
     may intercept. Single files, node ids, -k/-m expressions,
-    --collect-only and cache replays (--lf/--ff) all run in-process."""
+    --collect-only and cache replays (--lf/--ff) all run in-process, as
+    do runs with options the sharded runner would not honour: -x and
+    --maxfail (stop early), --deselect, --ignore and --ignore-glob
+    (narrow the selection) and --junitxml (one report file)."""
     opt = config.option
     if getattr(opt, "collectonly", False) or getattr(opt, "keyword", ""):
         return False
     if getattr(opt, "markexpr", "") or getattr(opt, "lf", False):
         return False
-    if getattr(opt, "failedfirst", False):
+    if getattr(opt, "failedfirst", False) or getattr(opt, "maxfail", 0):
         return False
+    for name in ("deselect", "ignore", "ignore_glob", "xmlpath"):
+        if getattr(opt, name, None):
+            return False
     args = config.args
     if not args:
         return False

@@ -418,3 +418,29 @@ def test_global_equality_delete_on_partitioned_table(spark, tmp_path):
         if not s["fields"]
     ]) == 1
     assert t.snapshot().count() == 37
+
+
+def test_equality_delete_over_data_files_sharing_a_basename(spark, tmp_path):
+    """Data files committed from another writer may share a basename
+    across directories (Spark names every partition's first file
+    part-00000-...). The reader keys each data file's sequence number
+    by basename; a repeated basename must not break the read."""
+    import pyarrow as pa
+
+    t = IcebergTable.create(
+        spark, str(tmp_path / "t"), spark.createDataFrame([], "k long")
+    )
+    files = []
+    for sub, keys in (("a", [1, 2, 3]), ("b", [4, 5, 6])):
+        os.makedirs(tmp_path / "ext" / sub)
+        p = str(tmp_path / "ext" / sub / "part-00000.parquet")
+        pq.write_table(pa.table({"k": pa.array(keys, pa.int64())}), p)
+        files.append({
+            "content": 0, "file_path": p, "file_format": "PARQUET",
+            "partition": {}, "record_count": len(keys),
+            "file_size_in_bytes": os.path.getsize(p),
+            "lower_bounds": None, "upper_bounds": None,
+        })
+    t.commit_external_snapshot(files, [], "replace")
+    t.equality_delete(spark.createDataFrame([(2,), (5,)], "k long"), ["k"])
+    assert sorted(r["k"] for r in t.snapshot().collect()) == [1, 3, 4, 6]

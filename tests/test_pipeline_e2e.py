@@ -5,6 +5,8 @@ rows, and zero PHI patterns post-scrub."""
 
 from __future__ import annotations
 
+import glob
+import os
 import re
 
 import pytest
@@ -178,6 +180,15 @@ def test_hl7_pipeline(pipeline, spark, tmp_path):
     assert by_id["30138"]["address"] == "[REDACTED_ADDRESS]"
     # OBX note text survives
     assert "RESULT" in by_id["30138"]["note_text"]
+    # column-level and regex rule hits are recorded together, in one
+    # provenance append
+    fired = {r["rule_id"]
+             for r in pipeline.prov.rules_applied(result["batch_id"]).collect()}
+    assert {"PHI_COLUMN_REDACT_NAME", "PHI_SSN"} <= fired
+    assert len(glob.glob(os.path.join(
+        pipeline.zones.provenance, "provenance_rules_applied", "*",
+        "*.parquet",
+    ))) == 1
 
 
 def test_hl7_missing_pid_quarantined(pipeline, spark, tmp_path):
@@ -198,6 +209,11 @@ def test_rules_applied_recorded(pipeline, spark, tmp_path):
     assert "PHI_PHONE" in fired or "PHI_ADDRESS_SIMPLE" in fired
     assert "PHI_EMAIL" in fired
     assert all(r["hits"] > 0 for r in rules)
+    # every fired rule of the batch lands in one provenance append
+    assert len(glob.glob(os.path.join(
+        pipeline.zones.provenance, "provenance_rules_applied", "*",
+        "*.parquet",
+    ))) == 1
 
 
 def test_resume_pending_from_each_status(pipeline, spark, tmp_path):
